@@ -1,0 +1,11 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until the listener bus has delivered every queued event, so a
+  * listener's aggregates are complete before they are read. The bus is
+  * `private[spark]`, hence this package. */
+object BusDrain {
+  def apply(sc: SparkContext, timeoutMs: Long = 30000L): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+}
