@@ -166,6 +166,14 @@ object Bench {
     (fullLine, line)
   }
 
+  /** The `sf` of a detail snapshot when its directory name differs from
+    * `sfDir`'s; None when they match or the snapshot records none. */
+  private[graft] def snapshotSfClash(snapshot: String, sfDir: String): Option[String] = {
+    def name(dir: String) = new java.io.File(dir).getName
+    "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(snapshot).map(_.group(1))
+      .filter(sf => name(sf) != name(sfDir))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -183,10 +191,13 @@ object Bench {
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
-    // warmup pass (untimed; failures surface in the timed pass)
-    SparkEntry.queries.foreach { case (_, fn) =>
+    // warmup pass (untimed; failures surface in the timed pass); it also
+    // records which path each driver-local route took, per query
+    val sliver = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val before = Sliver.counts
       try runOnce(fn) catch { case _: Throwable => () }
-    }
+      name -> Sliver.since(before)
+    }.filter(_._2.nonEmpty).sortBy(_._1)
 
     // round-robin: iteration i of EVERY query before iteration i+1 of any.
     // Calibration is sampled INSIDE the sweep (once per iteration, after
@@ -333,6 +344,10 @@ object Bench {
       "epoch_pin_kind" -> (if (baseline.get(SweepCalibrationKey).exists(_ > 0)) "\"sweep\""
         else if (baseline.get(CalibrationKey).exists(_ > 0)) "\"quiet\"" else "null"),
       "failed" -> failed.map("\"" + _ + "\"").mkString("[", ",", "]"),
+      "sliver" -> obj(sliver.map { case (q, sites) =>
+        q -> obj(sites.toSeq.sorted.map { case (site, (l, f)) =>
+          site -> obj(Seq("local" -> l.toString, "frames" -> f.toString)) })
+      }),
       "sf" -> ("\"" + sfDir + "\"")))
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
@@ -344,11 +359,18 @@ object Bench {
     // written to docs/BENCH_DETAIL_r0N.json, N inferred as latest
     // BENCH_r*.json + 1 (the round whose driver bench has not run yet);
     // the driver's own run is the last writer, so the committed snapshot
-    // is the canonical gate run.
+    // is the canonical gate run. A snapshot taken at another scale factor
+    // is never overwritten (a dev run at sf0.01 once replaced the sf0.1
+    // canonical).
     try {
       val p = java.nio.file.Paths.get(detailPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (detail + "\n").getBytes("UTF-8"))
+      Some(p).filter(java.nio.file.Files.exists(_)).flatMap(f => snapshotSfClash(
+          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"), sfDir)) match {
+        case Some(sf) => System.err.println(s"[bench] kept $detailPath: it holds an $sf run")
+        case None =>
+          java.nio.file.Files.createDirectories(p.getParent)
+          java.nio.file.Files.write(p, (detail + "\n").getBytes("UTF-8"))
+      }
     } catch { case e: Throwable => System.err.println(s"[bench] round snapshot write failed: $e") }
     spark.stop()
   }

@@ -733,35 +733,22 @@ object Dedup {
     out
   }
 
-  /** Size gate (edge ROWS) of the broadcast-local component labeling:
-    * below it, labels are computed in ONE driver-side union-find pass
-    * over the collected edge sliver and returned as a local relation —
-    * the HNSW broadcast-local-walk discipline (guide §1.2 step 1)
-    * applied to the CC loops, whose measured bench profile is ~0.7 s of
-    * pure fixed stage overhead PER ROUND on a few-thousand-row frame
-    * (ProbeCC: g4's 3573-edge graph paid ~4 s of scheduler round-trips
-    * for ~µs of arithmetic). An edge set under the gate is
-    * broadcast-sized by definition, and candidate-pair graphs are a
-    * sliver of the corpus BY CONSTRUCTION (LSH/threshold screens);
-    * a graph above the gate keeps the O(log n) distributed loop —
-    * the only shape that works corpus-sized. 0 forces the frame loops
-    * (the spec equivalence fixtures do). */
-  val CcLocalMaxEdgesKey = "spark.graft.cc.maxLocalEdges"
-  val CcLocalMaxEdgesDefault: Long = 2000000L
-
   /** One driver-side min-label union-find pass over a collected (u, v)
     * sliver; label(x) = min node id of x's component — exactly the
     * fixed point BOTH frame loops converge to (StarComponentsSpec pins
     * local ≡ star ≡ propagation on the d2 graph, random graphs and the
-    * 200-node path). Long-keyed frames only; None above the gate. */
+    * 200-node path). The CC loops pay ~0.7 s of fixed stage overhead PER
+    * ROUND on a few-thousand-row frame (ProbeCC: g4's 3573-edge graph
+    * paid ~4 s for ~µs of arithmetic). Long-keyed frames only; None when
+    * [[graft.Sliver]] does not admit the `nEdges`-row sliver — that graph
+    * keeps the O(log n) distributed loop. */
   private def ccLocalLabels(e: DataFrame, nEdges: Long): Option[DataFrame] = {
     val spark = e.sparkSession
     import spark.implicits._
-    val gate = spark.conf.get(CcLocalMaxEdgesKey,
-      CcLocalMaxEdgesDefault.toString).toLong
     val longKeyed = e.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    if (nEdges > gate || !longKeyed) return None
+    if (!longKeyed || !graft.Sliver.fits("cc", spark)(
+        () => graft.Sliver.footprint(e.schema, nEdges))) return None
     // union-find, roots kept at the component MIN (merging roots keeps
     // the smaller id as parent) with full path compression on find
     val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -782,16 +769,8 @@ object Dedup {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
     }
-    // size-derived layout (the frame loops' partition discipline): a
-    // LocalRelation otherwise materializes across leafNodeDefault-
-    // Parallelism tasks — 32 tasks of ~15 rows each for a sliver graph,
-    // pure per-task overhead for every downstream consumer (measured:
-    // d7's artifact read 0.08 s off the frame path's 1-partition
-    // checkpoint vs 0.28-0.43 s off the 32-way local relation)
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, nodes.size / 50000 + 1))
     Some(nodes.keysIterator.map(id => (id, find(id))).toSeq
-      .toDF("id", "label").coalesce(parts))
+      .toDF("id", "label").coalesce(graft.Sliver.localParts(spark, nodes.size)))
   }
 
   /** As [[connectedComponents]], also reporting the propagation-round

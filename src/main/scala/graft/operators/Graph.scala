@@ -98,30 +98,16 @@ object Graph {
     math.max(1, math.min(s.sparkContext.defaultParallelism * 4,
       (rows / EdgeRowsPerPartition).toInt + 1))
 
-  /** Size gate (normalized pair ROWS) of the broadcast-local graph
-    * kernels — the [[Dedup.connectedComponentsStar]] `ccLocalLabels`
-    * discipline (guide §1.2 step 1) applied to the rest of the family:
-    * below the gate the collected pair sliver (16 bytes/row — 2M rows
-    * ≈ 32 MB, broadcast-sized by definition) runs the whole recurrence
-    * in one driver pass instead of iterations × fixed distributed-stage
-    * overhead (the measured cost shape at bench scale: g1 paid
-    * ~0.4-0.5 s of scheduler round-trips PER STEP for ~10 M long ops
-    * total). Every kernel here is EXACT integer arithmetic — BIGINT
-    * sums, integer DIV, modular checksums, exact counts — so the local
-    * replication is order-independent and provably bit-identical to the
-    * frame fixed point (GraphLocalEquivalenceSpec pins local ≡ frame on
-    * the real corpus and the planted fixtures). A graph above the gate
-    * keeps the distributed loops — the only shape that works
-    * corpus-sized; 0 forces them (the spec equivalence fixtures do). */
-  val GraphLocalMaxEdgesKey = "spark.graft.graph.maxLocalEdges"
-  val GraphLocalMaxEdgesDefault: Long = 2000000L
-
-  private def underLocalGate(p: DataFrame, nPairs: Long): Boolean = {
-    val gate = p.sparkSession.conf.get(GraphLocalMaxEdgesKey,
-      GraphLocalMaxEdgesDefault.toString).toLong
-    nPairs > 0 && nPairs <= gate && p.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-  }
+  /** Route of the broadcast-local graph kernels (long-keyed pairs only):
+    * when [[graft.Sliver]] admits the `nPairs`-row sliver, one driver
+    * pass replaces iterations × fixed stage overhead (g1 paid ~0.4-0.5 s
+    * of scheduler round-trips PER STEP for ~10 M long ops). Every kernel
+    * is EXACT integer arithmetic, so the local replication is
+    * bit-identical to the frame fixed point (GraphLocalEquivalenceSpec). */
+  private def underLocalGate(p: DataFrame, nPairs: Long): Boolean =
+    p.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
+      graft.Sliver.fits("graph", p.sparkSession)(
+        () => graft.Sliver.footprint(p.schema, nPairs))
 
   /** Collected (p1, p2) pair sliver as dense-indexed endpoint arrays:
     * (node id per dense index, edge endpoint a, edge endpoint b). Null
@@ -144,12 +130,6 @@ object Graph {
     }
     (ids.toArray, ea.toArray, eb.toArray)
   }
-
-  /** Size-derived layout for a node-bound local relation (the
-    * ccLocalLabels partition discipline — a bare LocalRelation
-    * materializes across leafNodeDefaultParallelism tasks). */
-  private def localParts(s: SparkSession, nRows: Int): Int =
-    math.max(1, math.min(s.sparkContext.defaultParallelism, nRows / 50000 + 1))
 
   /** Driver-local replication of the [[pageRank]] recurrence over a
     * collected pair sliver. Exact BIGINT arithmetic throughout: Long
@@ -186,7 +166,7 @@ object Graph {
     }
     (0 until n).map(v => (ids(v), deg(v), rank(v)))
       .toDF("node", "degree", "rank_micro")
-      .coalesce(localParts(spark, n))
+      .coalesce(graft.Sliver.localParts(spark, n))
   }
 
   /** Driver-local replication of the [[khopReach]] BFS over a collected
@@ -251,7 +231,7 @@ object Graph {
       out += ((h.toLong, next.length.toLong, checksum(next)))
     }
     out.toSeq.toDF("hop", "n_parts", "checksum")
-      .coalesce(localParts(spark, out.length))
+      .coalesce(graft.Sliver.localParts(spark, out.length))
   }
 
   /** Driver-local replication of the [[triangleStats]] census over a
@@ -319,9 +299,11 @@ object Graph {
       i += 1
     }
     val ppm = if (wedges > 0L) 3000000L * tri / wedges else 0L
-    Seq((n.toLong, sumDeg / 2L, wedges, tri, ppm))
+    // the frame's sums over an empty graph are SQL NULL, as in the oracle
+    def sum(x: Long): Option[Long] = if (n == 0) None else Some(x)
+    Seq((n.toLong, sum(sumDeg / 2L), sum(wedges), tri, ppm))
       .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles", "clustering_ppm")
-      .coalesce(localParts(spark, 1))
+      .coalesce(graft.Sliver.localParts(spark, 1))
   }
 
   private[operators] def pageRank(pairs: DataFrame, iterations: Int,
@@ -337,7 +319,7 @@ object Graph {
     // count job — Shim.localCheckpointWithCount)
     val (p, nPairs) = org.apache.spark.sql.graftshim.Shim
       .localCheckpointWithCount(normalized)
-    // size-gated broadcast-local recurrence (see [[GraphLocalMaxEdgesKey]])
+    // size-gated broadcast-local recurrence (see [[underLocalGate]])
     if (underLocalGate(p, nPairs)) {
       val out = pageRankLocal(p, iterations)
       Checkpoints.release(p)
@@ -478,12 +460,13 @@ object Graph {
     // (the pageRank partitioning discipline — see EdgeRowsPerPartition)
     val (p, nPairs) = org.apache.spark.sql.graftshim.Shim
       .localCheckpointWithCount(pairs)
-    // size-gated broadcast-local BFS (see [[GraphLocalMaxEdgesKey]]):
+    // size-gated broadcast-local BFS (see [[underLocalGate]]):
     // the report is exact counts + exact modular checksums — both
     // order-independent, so the local walk is bit-identical. The seed
     // frame must be long-keyed too (the pairs gate can't see it).
-    if (underLocalGate(p, nPairs) && seedNodes.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) {
+    if (seedNodes.schema.fields.forall(
+        _.dataType == org.apache.spark.sql.types.LongType) &&
+        underLocalGate(p, nPairs)) {
       val out = khopLocal(p, seedNodes, hops)
       Checkpoints.release(p)
       return out
@@ -571,7 +554,7 @@ object Graph {
         .select(least(col("p1"), col("p2")).as("p1"),
           greatest(col("p1"), col("p2")).as("p2"))
         .distinct())
-    // size-gated broadcast-local census (see [[GraphLocalMaxEdgesKey]])
+    // size-gated broadcast-local census (see [[underLocalGate]])
     if (underLocalGate(p, nP)) {
       val out = triangleStatsLocal(p)
       Checkpoints.release(p)

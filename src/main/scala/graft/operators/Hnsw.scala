@@ -460,17 +460,14 @@ object Hnsw {
     * Returns (qid, rank, neighbor), rank 1..[[K]], unordered. */
   private[operators] def expandTopK(e0: DataFrame, visited: DataFrame): DataFrame = {
     // Routing (r18, the [[deleteLocal]]/[[localWalkVisited]] discipline
-    // applied to the reporter): below [[ReportLocalMaxBytesKey]] the
-    // top-K + replica re-expansion runs in one driver-side pass over the
-    // collected visited/corpus slivers ([[expandTopKLocal]], spec-pinned
+    // applied to the reporter): when [[graft.Sliver]] admits the
+    // visited/corpus slivers, the top-K + replica re-expansion runs in
+    // one driver-side pass over them ([[expandTopKLocal]], spec-pinned
     // bit-identical) — ProbeS23S24 measured the frame reporter at
     // 0.7–1.6 s of fixed stage overhead per read (~6 broadcast-join
     // stages over a 13.5k-row corpus), × 4 concurrent in s24 and once
-    // per s21/s22/s23/p11 read. Above the gate the frame pass streams
-    // the corpus — the only shape that works corpus-sized.
-    val spark = e0.sparkSession
-    val localMax = spark.conf.get(ReportLocalMaxBytesKey,
-      WalkLocalMaxBytesDefault.toString).toLong
+    // per s21/s22/s23/p11 read. Otherwise the frame pass streams the
+    // corpus — the only shape that works corpus-sized.
     val lt = org.apache.spark.sql.types.LongType
     val typesOk =
       visited.schema("qid").dataType == lt &&
@@ -478,22 +475,19 @@ object Hnsw {
         visited.schema("sc").dataType == org.apache.spark.sql.types.DoubleType &&
         e0.schema("vec_id").dataType == lt &&
         isFloatArray(e0.schema("embedding").dataType)
-    // visited is request-sized (queries × ef × hops); probe it first so
+    // visited is request-sized (queries × ef × hops); measured first so
     // a corpus-sized e0 is only counted when visited already fits
-    val payload = Similarity.Dim.toLong * 4L + 36L
-    if (typesOk && localMax > 0 &&
-        visited.count() * 24L <= localMax &&
-        e0.count() * payload <= localMax)
+    if (typesOk && graft.Sliver.fits("hnsw.report", e0.sparkSession)(
+        () => graft.Sliver.bytes(visited), () => graft.Sliver.bytes(e0)))
       expandTopKLocal(e0, visited)
     else expandTopKFrames(e0, visited)
   }
 
-  /** Size gate (bytes of corpus payload) of the broadcast-local
-    * reporter: below it [[expandTopKLocal]] runs; above it the frame
-    * pass streams the corpus. Default = the walk's broadcast budget
-    * (a corpus under it is smaller than the adjacency the walk already
-    * collects); 0 forces the frame pass (the equivalence spec does). */
-  val ReportLocalMaxBytesKey = "spark.graft.hnsw.report.maxLocalBytes"
+  /** Spark's normalized float-array equality (-0.0 == 0.0, NaN == NaN)
+    * as a hash key: the normalized bits of every element. */
+  private def embKey(a: Array[Float]): IndexedSeq[Int] =
+    a.iterator.map(f =>
+      java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)).toIndexedSeq
 
   private[operators] def isFloatArray(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt match {
@@ -517,13 +511,7 @@ object Hnsw {
   private def expandTopKLocal(e0: DataFrame, visited: DataFrame): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    def embKey(a: Array[Float]): IndexedSeq[Int] =
-      a.iterator.map(f =>
-        java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)).toIndexedSeq
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
+    import Similarity.{beatsLocal => beats}
     @inline def norm0(s: Double): Double = if (s == 0.0d) 0.0d else s
     val vRows = visited.select("qid", "node", "sc").collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
@@ -567,9 +555,7 @@ object Hnsw {
       cs.sortWith((a, b) => beats(a._1, a._2, b._1, b._2)).take(K)
         .iterator.zipWithIndex.map { case ((_, id), pos) => (q, pos + 1, id) }
     }.toSeq
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, out.size / 50000 + 1))
-    out.toDF("qid", "rank", "neighbor").coalesce(parts)
+    out.toDF("qid", "rank", "neighbor").coalesce(graft.Sliver.localParts(spark, out.size))
   }
 
   /** The declarative frame reporter — the above-gate path. */
@@ -604,6 +590,13 @@ object Hnsw {
       .select(col("qid"), (col("pos") + 1).as("rank"), col("neighbor"))
   }
 
+  /** Target visited-frame rows per task of the frame walk's per-hop
+    * coalesce — the partition count follows (queries × ef × hops), not
+    * a constant (the r17 literal `coalesce(16)` serialized the beam
+    * scoring onto 16 tasks at ANY scale; now 1M queries × ef=16 caps at
+    * defaultParallelism while bench-scale frames stay at 1 task). */
+  val VisitedRowsPerTask = 65536L
+
   /** The beam search's VISITED set — (qid, node, sc) for every node the
     * descent + layer-0 beam touched, scored once on arrival. The read
     * path reports its top-[[K]]; the incremental insert uses it as the
@@ -621,29 +614,6 @@ object Hnsw {
     * session accrues no cached generations (one checkpointed visited
     * frame per call is the entire residue, and it is the return
     * value). */
-  /** Size gate of the broadcast-local walk (bytes of estimated
-    * adjacency payload): below it the whole descent + beam runs as ONE
-    * driver-side pass over the collected adjacency
-    * ([[localWalkVisited]]); above it the per-hop frame loop runs
-    * ([[frameVisited]] — the only shape that works when the graph is
-    * corpus-sized). The default is broadcast-join-sized (the same
-    * regime as [[expandTopK]]'s explicit broadcasts): an adjacency
-    * under a few hundred MB is exactly the side a cluster would ship
-    * to every executor anyway, and walking it beside the driver turns
-    * ~90 scheduler round-trips per read into zero. Deployments with a
-    * bigger driver can raise `spark.graft.hnsw.walk.maxLocalBytes`;
-    * setting it to 0 forces the frame walk everywhere (the spec
-    * equivalence fixture does). */
-  val WalkLocalMaxBytesKey = "spark.graft.hnsw.walk.maxLocalBytes"
-  val WalkLocalMaxBytesDefault: Long = 256L << 20
-
-  /** Target visited-frame rows per task of the frame walk's per-hop
-    * coalesce — the partition count follows (queries × ef × hops), not
-    * a constant (the r17 literal `coalesce(16)` serialized the beam
-    * scoring onto 16 tasks at ANY scale; now 1M queries × ef=16 caps at
-    * defaultParallelism while bench-scale frames stay at 1 task). */
-  val VisitedRowsPerTask = 65536L
-
   private[operators] def visitedFrame(e0: DataFrame, adjAll: DataFrame,
       queries: DataFrame, ef: Int = Ef, beamHops: Int = BeamHops): DataFrame = {
     // The adjacency must enter the loops CHECKPOINT-BACKED, not as a
@@ -661,20 +631,15 @@ object Hnsw {
     val preOwned = adjAll.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     val adj = if (preOwned) adjAll else adjAll.localCheckpoint()
-    val spark = adj.sparkSession
-    // route by MEASURED adjacency size (one count over the checkpoint —
-    // the rows are fixed-width, so rows × payload is exact, not an
-    // estimate): small graphs take the single-pass local walk, corpus-
-    // sized graphs the iterative frame walk. Long-keyed frames only —
-    // spec fixtures with other id types keep the frame path.
-    val localMax = spark.conf.get(WalkLocalMaxBytesKey,
-      WalkLocalMaxBytesDefault.toString).toLong
+    // route by MEASURED adjacency size (one count over the checkpoint):
+    // the local walk turns ~90 scheduler round-trips per read into zero.
+    // Long-keyed frames only — other id types keep the frame path.
     val longKeyed = Seq("node", "nbr").forall(c =>
         adj.schema(c).dataType == org.apache.spark.sql.types.LongType) &&
       queries.schema("qid").dataType == org.apache.spark.sql.types.LongType
-    val adjBytes = adj.count() * (Similarity.Dim.toLong * 4L + 36L)
     val out =
-      if (longKeyed && adjBytes <= localMax)
+      if (longKeyed && graft.Sliver.fits("hnsw.walk", adj.sparkSession)(
+          () => graft.Sliver.bytes(adj)))
         localWalkVisited(e0, adj, queries, ef, beamHops)
       else frameVisited(e0, adj, queries, ef, beamHops)
     if (!preOwned) graft.Checkpoints.release(adj)
@@ -733,22 +698,9 @@ object Hnsw {
           new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]())
           .append((r.getLong(2), r.getSeq[Float](3).toArray))
       }
-    // CosineSimilarity.nullSafeEval's exact loop: float inputs widened
-    // per element, double accumulation in index order, zero-norm ⇒ 0.0
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
-    // (score desc, id asc) — TopKBuffer.beats / max_by(struct(sc, -node))
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
+    // CosineSimilarity's exact loop; (score desc, id asc) — TopKBuffer.beats
+    // / max_by(struct(sc, -node))
+    import Similarity.{beatsLocal => beats, cosLocal => cos}
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     qRows.foreach { case (qid, qemb) =>
       // greedy descent through the upper layers, beam width 1, to each
@@ -1214,10 +1166,10 @@ object Hnsw {
     * recall over survivors is what the spec pins.
     *
     * Routing (r18, guide §1.2 step 1 — the [[localWalkVisited]]
-    * discipline applied to the delete): below
-    * [[DeleteLocalMaxBytesKey]] the whole rename→mask→bridge→re-trim
+    * discipline applied to the delete): when [[graft.Sliver]] admits
+    * the adjacency and survivors, the whole rename→mask→bridge→re-trim
     * pass runs driver-side over the collected slivers
-    * ([[deleteLocal]], spec-pinned bit-identical); above it this
+    * ([[deleteLocal]], spec-pinned bit-identical); otherwise this
     * declarative frame pass stands unchanged — the only shape that
     * works when the adjacency is corpus-sized. ProbeS23S24 measured
     * the frame pass at 3.2–6.7 s of fixed stage overhead for a
@@ -1225,9 +1177,6 @@ object Hnsw {
     * round-trips for microseconds of arithmetic. */
   def deleteFromAdjacency(survivors: DataFrame, adj: DataFrame,
       doomed: DataFrame): DataFrame = {
-    val spark = adj.sparkSession
-    val localMax = spark.conf.get(DeleteLocalMaxBytesKey,
-      WalkLocalMaxBytesDefault.toString).toLong
     val lt = org.apache.spark.sql.types.LongType
     val typesOk =
       adj.schema("node").dataType == lt && adj.schema("nbr").dataType == lt &&
@@ -1237,24 +1186,13 @@ object Hnsw {
         isFloatArray(survivors.schema("embedding").dataType) &&
         doomed.schema("vec_id").dataType == lt &&
         isFloatArray(doomed.schema("embedding").dataType)
-    // fixed-width rows, so rows × payload is exact; the survivor gate is
-    // only probed once the adjacency passed (&& short-circuits — a
+    // survivors are only counted once the adjacency fits (a
     // corpus-sized graph never pays the survivor scan)
-    val payload = Similarity.Dim.toLong * 4L + 36L
-    if (typesOk && localMax > 0 &&
-        adj.count() * payload <= localMax &&
-        survivors.count() * payload <= localMax)
+    if (typesOk && graft.Sliver.fits("hnsw.delete", adj.sparkSession)(
+        () => graft.Sliver.bytes(adj), () => graft.Sliver.bytes(survivors)))
       deleteLocal(survivors, adj, doomed)
     else deleteFrames(survivors, adj, doomed)
   }
-
-  /** Size gate (bytes of adjacency/survivor payload) of the broadcast-
-    * local delete: below it the rename→mask→bridge→re-trim pass runs in
-    * one driver-side pass over the collected slivers; above it the
-    * declarative frame pass runs. Default = the walk's broadcast budget
-    * (an adjacency under it is broadcast-sized by definition); 0 forces
-    * the frame pass (the equivalence spec does). */
-  val DeleteLocalMaxBytesKey = "spark.graft.hnsw.delete.maxLocalBytes"
 
   /** Driver-local replication of [[deleteFrames]] — bit-identical by
     * construction (HnswDeleteEquivalenceSpec pins it on the real corpus
@@ -1275,9 +1213,6 @@ object Hnsw {
       doomed: DataFrame): DataFrame = {
     val spark = adj.sparkSession
     import spark.implicits._
-    def embKey(a: Array[Float]): IndexedSeq[Int] =
-      a.iterator.map(f =>
-        java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)).toIndexedSeq
     def arr(r: org.apache.spark.sql.Row, i: Int): Array[Float] =
       if (r.isNullAt(i)) null else r.getSeq[Float](i).toArray
     val aRows = adj.select("layer", "node", "nbr", "nemb").collect()
@@ -1323,10 +1258,7 @@ object Hnsw {
     val cands = (masked.iterator.filter(r => affected((r._1, r._2))) ++ bridge)
       .filter { case (l, n, b, _) => candSeen.add((l, n, b)) }.toArray
     val survEmb: Map[Long, Array[Float]] = survRows.toMap
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
+    import Similarity.{beatsLocal => beats}
     val retrim = cands.groupBy(r => (r._1, r._2)).iterator.flatMap {
       case ((layer, node), rs) =>
         val en = survEmb.get(node).orNull
@@ -1345,11 +1277,7 @@ object Hnsw {
     val untouched = masked.iterator
       .filterNot(r => affected((r._1, r._2))).toSeq
     val out = untouched ++ retrim
-    // size-derived layout (the ccLocalLabels discipline — a bare
-    // LocalRelation materializes across leafNodeDefaultParallelism tasks)
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, out.size / 50000 + 1))
-    out.toDF("layer", "node", "nbr", "nemb").coalesce(parts)
+    out.toDF("layer", "node", "nbr", "nemb").coalesce(graft.Sliver.localParts(spark, out.size))
   }
 
   /** The declarative frame pass — the above-gate path (see

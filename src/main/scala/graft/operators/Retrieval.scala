@@ -479,7 +479,7 @@ object Retrieval {
     p4Frame(s, dir, s13RrfHybridFor(s, dir, terms, queryVec),
       queryVec.select(col("qemb")))
 
-  private def p4Frame(s: SparkSession, dir: String, fused: DataFrame,
+  private[operators] def p4Frame(s: SparkSession, dir: String, fused: DataFrame,
       q: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
@@ -489,21 +489,18 @@ object Retrieval {
       .select(col("doc_id"), V.cosine(col("qemb"), col("embedding")).as("rel"),
         col("embedding").as("cemb"))
     // broadcast-local greedy (Similarity.mmrGreedyLocal — bit-identical
-    // rounds, s12's gate): the candidate sliver is RrfK-bounded (≤10
+    // rounds, s12's route): the candidate sliver is RrfK-bounded (≤10
     // rows), so the whole unroll is one collect + driver arithmetic
     // instead of 7 localCheckpoint round-trips over ≤10-row frames
-    val gate = s.conf.get(Similarity.MmrLocalMaxRowsKey,
-      Similarity.MmrLocalMaxRowsDefault.toString).toLong
-    if (gate > 0L && gate <= Int.MaxValue - 1) {
-      val rows = cand0.limit(gate.toInt + 1).collect()
-      if (rows.length <= gate) {
+    graft.Sliver.collect("p4.mmr", cand0) match {
+      case Some(rows) =>
         val cs = rows.map(r => (0L, r.getLong(0), r.getDouble(1),
           r.getSeq[Float](2).toArray))
         return p4Ledger(s, dir,
           Similarity.mmrGreedyLocal(cs, P4K, Similarity.MmrLambda)
             .map { case (_, id, rank) => (id, rank) }
             .toDF("doc_id", "rank").coalesce(1))
-      }
+      case None =>
     }
     val cand = cand0.localCheckpoint()
     val pairs = cand.select(col("doc_id").as("a"), col("cemb").as("aemb"))

@@ -125,25 +125,20 @@ object Similarity {
     // Routing (r18, the Hnsw broadcast-local discipline applied to the
     // brute-force serving primitive): the frame pass is 3 stages of
     // fixed overhead (broadcast, topk aggregate pair, sort) around ~ms
-    // of scoring work at bench scale — below [[BruteLocalMaxBytesKey]]
-    // the scoring loop runs driver-side over the collected slivers,
+    // of scoring work at bench scale — when [[graft.Sliver]] admits the
+    // slivers the scoring loop runs driver-side over them,
     // bit-identically (BruteTopKEquivalenceSpec; s1/s5/s15 are oracle-
-    // hash-gated on top). Above the gate the frame pass streams the
-    // corpus — the only shape that works corpus-sized.
-    val spark = corpus.sparkSession
-    val localMax = spark.conf.get(BruteLocalMaxBytesKey,
-      BruteLocalMaxBytesDefault.toString).toLong
+    // hash-gated on top). Otherwise the frame pass streams the corpus —
+    // the only shape that works corpus-sized.
     val lt = org.apache.spark.sql.types.LongType
     val typesOk =
       corpus.schema("vec_id").dataType == lt &&
         Hnsw.isFloatArray(corpus.schema("embedding").dataType) &&
         queries.schema("qid").dataType == lt &&
         Hnsw.isFloatArray(queries.schema("qemb").dataType)
-    val payload = Dim.toLong * 4L + 36L
     val local =
-      if (typesOk && localMax > 0 &&
-          queries.count() * payload <= localMax &&
-          corpus.count() * payload <= localMax)
+      if (typesOk && graft.Sliver.fits("brute", corpus.sparkSession)(
+          () => graft.Sliver.bytes(queries), () => graft.Sliver.bytes(corpus)))
         bruteTopKLocal(corpus, queries, k, excludeSelf)
       else None
     local.getOrElse {
@@ -154,11 +149,6 @@ object Similarity {
         .agg(TopK.topKByScore(V.cosine(col("qemb"), col("embedding")), col("vec_id"), k).as("nbrs")))
     }
   }
-
-  /** Size gate (bytes of corpus payload) of the broadcast-local brute
-    * top-k; 0 forces the frame pass (the equivalence spec does). */
-  val BruteLocalMaxBytesKey = "spark.graft.brute.maxLocalBytes"
-  val BruteLocalMaxBytesDefault: Long = 256L << 20
 
   /** Driver-local replication of the frame brute top-k — bit-identical
     * by construction: [[cosLocal]] is the codegen'd CosineSimilarity's
@@ -180,10 +170,6 @@ object Similarity {
     val cs = corpus.select("vec_id", "embedding").collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
     val out = qs.iterator.flatMap { case (qid, qemb) =>
       if (qemb == null) Iterator.empty
       else {
@@ -194,7 +180,7 @@ object Similarity {
             buf += ((if (s == 0.0d) 0.0d else s, id))
           }
         }
-        buf.sortWith((a, b) => beats(a._1, a._2, b._1, b._2)).take(k)
+        buf.sortWith((a, b) => beatsLocal(a._1, a._2, b._1, b._2)).take(k)
           .iterator.zipWithIndex.map { case ((_, id), pos) => (qid, pos + 1, id) }
       }
     }.toSeq
@@ -1741,19 +1727,6 @@ object Similarity {
     s12MmrFrame(Tables.embeddings(s, dir).select("vec_id", "embedding"),
       queries, excludeSelf = false)
 
-  /** Size gate (candidate ROWS) of the broadcast-local MMR greedy:
-    * below it the (queries × shortlist) candidate sliver is collected
-    * once and the whole greedy unroll runs driver-side — the HNSW/CC/PQ
-    * broadcast-local discipline applied to the re-rank, whose frame
-    * unroll is DRIVER-ACTION-bound (7 localCheckpoints over ≤200-row
-    * slivers: cand, pairs, sel1, 4 rounds). The sliver is
-    * request-bounded BY CONSTRUCTION (queries × MmrShortlist — a
-    * serving tier runs MMR in memory on exactly this sliver); a
-    * million-query batch above the gate keeps the frame unroll.
-    * 0 forces the frames (spec equivalence fixtures). */
-  val MmrLocalMaxRowsKey = "spark.graft.mmr.maxLocalRows"
-  val MmrLocalMaxRowsDefault: Long = 100000L
-
   /** CosineSimilarity.nullSafeEval's exact loop (the localWalkVisited
     * replication): float inputs widened per element, double
     * accumulation in index order, zero-norm ⇒ 0.0. */
@@ -1765,6 +1738,12 @@ object Similarity {
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  }
+
+  /** TopKBuffer's exact order: score desc via Double.compare, then id asc. */
+  private[operators] def beatsLocal(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
+    val c = java.lang.Double.compare(s, s2)
+    c > 0 || (c == 0 && i < i2)
   }
 
   /** The greedy MMR unroll over a COLLECTED candidate sliver —
@@ -1832,14 +1811,12 @@ object Similarity {
       .join(broadcast(shortIds), Seq("cand_id"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid"), col("cand_id"), V.cosine(col("qemb"), col("cemb")).as("rel"), col("cemb"))
-    // broadcast-local greedy below the gate: one CollectLimit job doubles
-    // as the gate test (the PQ-train pattern); rel comes from the frame's
-    // own codegen'd cosine, pairwise sims from the identical local loop
-    val gate = spark.conf.get(MmrLocalMaxRowsKey,
-      MmrLocalMaxRowsDefault.toString).toLong
-    if (gate > 0L && gate <= Int.MaxValue - 1) {
-      val rows = cand0.limit(gate.toInt + 1).collect()
-      if (rows.length <= gate) {
+    // broadcast-local greedy: the frame unroll is DRIVER-ACTION-bound (7
+    // localCheckpoints over a queries × MmrShortlist sliver). rel comes
+    // from the frame's own codegen'd cosine, pairwise sims from the
+    // identical local loop
+    graft.Sliver.collect("mmr", cand0) match {
+      case Some(rows) =>
         val cs = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getSeq[Float](3).toArray))
         return mmrGreedyLocal(cs, MmrK, MmrLambda)
@@ -1847,7 +1824,7 @@ object Similarity {
           .coalesce(1)
           .select(col("qid"), col("rank"), col("neighbor"))
           .orderBy("qid", "rank")
-      }
+      case None =>
     }
     val cand = cand0.localCheckpoint()
     val pairs = cand.select(col("qid"), col("cand_id").as("a"), col("cemb").as("aemb"))

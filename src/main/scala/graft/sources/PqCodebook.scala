@@ -90,36 +90,20 @@ object PqCodebook {
     trainManyLocal(e, ks, iters, m, sub)
       .getOrElse(trainManyFrames(e, ks, iters, m, sub))
 
-  /** Size gate (corpus ROWS) of the broadcast-local Lloyd: below it the
-    * training corpus is collected once and every iteration runs as a
-    * driver-side loop over the identical fixed-point arithmetic — the
-    * HNSW/CC broadcast-local discipline (guide §1.2 step 1) applied to
-    * PQ training, whose distributed form is STAGE-overhead-bound
-    * (measured sf0.1: ~4 s for the 4-size grid, ~9 jobs of per-stage
-    * scheduling for ~25 M integer ops — the arithmetic itself is
-    * milliseconds). This is also the shape PQ training takes in
-    * production vector stores: k-means runs in memory on a bounded
-    * training SAMPLE (FAISS's train() collects the sample to one
-    * machine), never as a distributed loop over the full corpus; a
-    * corpus above the gate keeps the shared-dataflow distributed form.
-    * 0 forces the frame path (spec equivalence fixtures). */
-  val TrainLocalMaxRowsKey = "spark.graft.pq.train.maxLocalRows"
-  val TrainLocalMaxRowsDefault: Long = 100000L
-
   /** Driver-side Lloyd over a collected corpus sliver — bit-identical
     * to [[trainManyFrames]] (same micro quantization, same argmin
     * tie-break to the lowest codeword, exact long sums, the same
     * floor(double-divide) centroid update, empty clusters keep their
     * codeword; sums/counts are order-independent so the collected row
-    * order is immaterial). None above the gate, on a non-(vec_id,
+    * order is immaterial). The frames are STAGE-overhead-bound (sf0.1:
+    * ~4 s of per-stage scheduling for ~25 M integer ops), and FAISS's
+    * train() likewise runs k-means on one machine. None when
+    * [[graft.Sliver]] does not admit the corpus, on a non-(vec_id,
     * embedding) frame, on a ragged corpus, or when any init vector
     * vec_id < max(ks) is missing — callers fall back to the frames. */
   private def trainManyLocal(e: DataFrame, ks: Seq[Int], iters: Int,
       m: Int, sub: Int): Option[DataFrame] = {
     val spark = e.sparkSession
-    val gate = spark.conf.get(TrainLocalMaxRowsKey,
-      TrainLocalMaxRowsDefault.toString).toLong
-    if (gate <= 0L || gate > Int.MaxValue - 1) return None
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
     val fields = e.schema.fields
     val shapeOk = fields.length == 2 && fields(0).dataType == LongType &&
@@ -128,11 +112,11 @@ object PqCodebook {
         case _ => false
       })
     if (!shapeOk) return None
-    // one CollectLimit job doubles as the gate test: gate+1 rows back
-    // means the corpus is above the gate (the scan short-circuits at
-    // scale — no full count needed)
-    val rows = e.limit(gate.toInt + 1).collect()
-    if (rows.length > gate) return None
+    // one CollectLimit job both fetches and measures (no full count)
+    val rows = graft.Sliver.collect("pq.train", e) match {
+      case Some(rs) => rs
+      case None => return None
+    }
     val dim = m * sub
     val n = rows.length
     val vecs = Array.newBuilder[Array[Long]]
@@ -153,6 +137,8 @@ object PqCodebook {
     }
     val xs = vecs.result()
     val kmax = ks.max
+    // site precondition: Lloyd starts from the init vectors, so a corpus
+    // missing any of them — an empty one included — is left to the frames
     if ((0 until kmax).exists(c => !byId.contains(c.toLong))) return None
     // cents(ki)(mi)(c) = codeword array, initialized from vec_id < k
     var cents = ks.map(k => Array.tabulate(m, k) { (mi, c) =>

@@ -17,11 +17,12 @@ object TimeQueries {
         val Array(k, v) = kv.split("=", 2); (k, v)
     }.toSeq
     val names = args.drop(1).filterNot(a => a.startsWith("--") || a.contains('='))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val b0 = graft.SessionTuning.shuffleScaleOut(graft.SessionTuning.inputSplits(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)
+      SparkSession.builder().master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")), 32)
+        .config("spark.ui.enabled", "false")), cpus)
     val b = confs.foldLeft(b0) { case (bb, (k, v)) => bb.config(k, v) }
     val spark = (if (plain) b else b.withExtensions(new graft.GraftExtensions)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -142,4 +142,11 @@ class BenchSpec extends AnyFunSuite {
     assert(t("d7_dup_clusters") < 1.0, s"history row leaked into the gate: $t")
   }
 
+  test("a round snapshot at another scale factor is never overwritten") {
+    val sf01 = """{"min_total":185.5,"failed":[],"sf":"testdata/sf0.1"}"""
+    assert(Bench.snapshotSfClash(sf01, "testdata/sf0.01").contains("testdata/sf0.1"))
+    assert(Bench.snapshotSfClash(sf01, "testdata/sf0.1").isEmpty)
+    assert(Bench.snapshotSfClash(sf01, "/data/sf0.1").isEmpty)
+    assert(Bench.snapshotSfClash("{}", "testdata/sf0.01").isEmpty)
+  }
 }

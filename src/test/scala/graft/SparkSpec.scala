@@ -24,4 +24,25 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir: String = SparkSpec.sfDir
+
+  /** Reference cosine for from-definition recomputes: float inputs
+    * widened per element, double accumulation in index order,
+    * zero-norm ⇒ 0.0. */
+  def cos(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  }
+
+  /** Evaluate `body` with session conf `key` set to `value` (None unsets
+    * it), then restore whatever was there before. */
+  def withConf[A](key: String, value: Option[String])(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

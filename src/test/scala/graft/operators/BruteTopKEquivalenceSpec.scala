@@ -1,23 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** r18: the broadcast-local brute top-k must be BIT-IDENTICAL to the
   * frame pass it short-circuits — registered s1/s5/s15 rows (all three
   * also oracle-hash-gated) and the s16/s24 truth consumers across both
   * paths, plus an edge fixture (self-exclusion, ties, null embedding,
   * sub-k corpus). */
-class BruteTopKEquivalenceSpec extends SparkSpec {
+class BruteTopKEquivalenceSpec extends LocalFrameEquivalence {
   import spark.implicits._
-
-  private def withGate[A](maxLocal: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Similarity.BruteLocalMaxBytesKey)
-    spark.conf.set(Similarity.BruteLocalMaxBytesKey, maxLocal)
-    try body
-    finally prev.fold(spark.conf.unset(Similarity.BruteLocalMaxBytesKey))(
-      v => spark.conf.set(Similarity.BruteLocalMaxBytesKey, v))
-  }
 
   private def collected(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long)] =
     df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
@@ -27,18 +18,17 @@ class BruteTopKEquivalenceSpec extends SparkSpec {
       ("s1", s => Similarity.s1BruteForceTopK(s, sfDir)),
       ("s5", s => Similarity.s5FilteredTopK(s, sfDir)),
       ("s15", s => Similarity.s15ExternalTopK(s, sfDir))).foreach { case (n, q) =>
-      val local = withGate((1L << 30).toString)(collected(q(spark)))
-      val frame = withGate("0")(collected(q(spark)))
+      val local = localPath("brute")(collected(q(spark)))
+      val frame = framePath("brute")(collected(q(spark)))
       assert(local.nonEmpty, s"$n empty")
       assert(local == frame, s"$n diverged across paths")
     }
   }
 
   test("local brute top-k ≡ frame: s16 recall and s24 truth consumers across paths") {
-    def s16(maxLocal: String): Seq[String] = withGate(maxLocal) {
+    def s16(): Seq[String] =
       Similarity.s16ExternalRecall(spark, sfDir).collect().map(_.toString).toSeq
-    }
-    assert(s16((1L << 30).toString) == s16("0"))
+    assert(localPath("brute")(s16()) == framePath("brute")(s16()))
   }
 
   test("local brute top-k ≡ frame on the edge fixture") {
@@ -53,9 +43,9 @@ class BruteTopKEquivalenceSpec extends SparkSpec {
       (10L, null.asInstanceOf[Array[Float]]))
       .toDF("qid", "qemb")
     Seq(true, false).foreach { ex =>
-      val local = withGate((1L << 30).toString)(
+      val local = localPath("brute")(
         collected(Similarity.bruteTopKFrame(corpus, queries, 3, ex)))
-      val frame = withGate("0")(
+      val frame = framePath("brute")(
         collected(Similarity.bruteTopKFrame(corpus, queries, 3, ex)))
       assert(local == frame, s"excludeSelf=$ex diverged: $local vs $frame")
       assert(local.nonEmpty)

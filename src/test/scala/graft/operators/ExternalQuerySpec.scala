@@ -24,16 +24,6 @@ class ExternalQuerySpec extends SparkSpec {
       q -> a.indices.map(i => ((3.0 * a(i) + b(i)) / 4.0).toFloat).toArray
     }.toMap
 
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
   private def bruteTop(q: Array[Float], pool: Map[Long, Array[Float]], k: Int): Seq[Long] =
     pool.toSeq.map { case (id, v) => (id, cos(q, v)) }
       .sortBy { case (id, s) => (-s, id) }.take(k).map(_._1)

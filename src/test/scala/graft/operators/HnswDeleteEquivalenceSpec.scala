@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** r18: the broadcast-local delete ([[Hnsw.deleteLocal]]) must be
   * BIT-IDENTICAL to the declarative frame pass it short-circuits — the
@@ -12,7 +11,7 @@ import graft.SparkSpec
   * the re-canonicalize step), plus the registered s23 rows across both
   * paths. Any drift in either implementation fails loudly (s23 and the
   * s23FromPersisted twin both route through this delete). */
-class HnswDeleteEquivalenceSpec extends SparkSpec {
+class HnswDeleteEquivalenceSpec extends LocalFrameEquivalence {
   import spark.implicits._
 
   private lazy val e = graft.Tables.embeddings(spark, sfDir)
@@ -28,29 +27,20 @@ class HnswDeleteEquivalenceSpec extends SparkSpec {
         else r.getSeq[Float](3).map(java.lang.Float.floatToRawIntBits)))
       .sortBy(t => (t._1, t._2, t._3))
 
-  private def withGate[A](maxLocal: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Hnsw.DeleteLocalMaxBytesKey)
-    spark.conf.set(Hnsw.DeleteLocalMaxBytesKey, maxLocal)
-    try body
-    finally prev.fold(spark.conf.unset(Hnsw.DeleteLocalMaxBytesKey))(
-      v => spark.conf.set(Hnsw.DeleteLocalMaxBytesKey, v))
-  }
-
   private def deleted(corpus: DataFrame, doomIds: Seq[Long],
-      maxLocal: String): Vector[(Int, Long, Long, Seq[Int])] = {
+      local: Boolean): Vector[(Int, Long, Long, Seq[Int])] = {
     val doom = corpus.filter(col("vec_id").isin(doomIds: _*))
     val surv = corpus.filter(!col("vec_id").isin(doomIds: _*))
     val adj = Hnsw.buildAdjacency(corpus).localCheckpoint()
-    val out = withGate(maxLocal) {
-      rowsOf(Hnsw.deleteFromAdjacency(surv, adj, doom))
-    }
+    def run() = rowsOf(Hnsw.deleteFromAdjacency(surv, adj, doom))
+    val out = if (local) localPath("hnsw.delete")(run()) else framePath("hnsw.delete")(run())
     graft.Checkpoints.release(adj)
     out
   }
 
   test("local delete ≡ frame delete on the real corpus (registered doomed set)") {
-    val local = deleted(e, Hnsw.deleteIds, (1L << 30).toString)
-    val frame = deleted(e, Hnsw.deleteIds, "0")
+    val local = deleted(e, Hnsw.deleteIds, local = true)
+    val frame = deleted(e, Hnsw.deleteIds, local = false)
     assert(local.nonEmpty)
     assert(local == frame,
       s"paths diverged: onlyLocal=${(local.toSet -- frame.toSet).take(3)} " +
@@ -65,17 +55,16 @@ class HnswDeleteEquivalenceSpec extends SparkSpec {
       .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
     val corpus = e.unionByName(replicas)
     val doomIds = Seq(0L, 1L, 20L, 40L)
-    val local = deleted(corpus, doomIds, (1L << 30).toString)
-    val frame = deleted(corpus, doomIds, "0")
+    val local = deleted(corpus, doomIds, local = true)
+    val frame = deleted(corpus, doomIds, local = false)
     assert(local.nonEmpty)
     assert(local == frame)
   }
 
   test("registered s23 rows identical across delete paths") {
-    def rows(maxLocal: String): Seq[(Long, Int, Long)] = withGate(maxLocal) {
+    def rows(): Seq[(Long, Int, Long)] =
       Hnsw.s23HnswDelete(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    }
-    assert(rows((1L << 30).toString) == rows("0"))
+    assert(localPath("hnsw.delete")(rows()) == framePath("hnsw.delete")(rows()))
   }
 }

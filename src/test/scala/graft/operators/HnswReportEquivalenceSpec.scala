@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** r18: the broadcast-local reporter ([[Hnsw.expandTopKLocal]]) must be
   * BIT-IDENTICAL to the declarative frame reporter it short-circuits —
@@ -10,31 +9,24 @@ import graft.SparkSpec
   * fixture that exercises the (qid, cemb) dedup. Any drift in either
   * implementation fails loudly (s21/s22/s23/p11 reads and the s24 curve
   * all report through this path). */
-class HnswReportEquivalenceSpec extends SparkSpec {
+class HnswReportEquivalenceSpec extends LocalFrameEquivalence {
   import spark.implicits._
 
-  private def withGate[A](maxLocal: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Hnsw.ReportLocalMaxBytesKey)
-    spark.conf.set(Hnsw.ReportLocalMaxBytesKey, maxLocal)
-    try body
-    finally prev.fold(spark.conf.unset(Hnsw.ReportLocalMaxBytesKey))(
-      v => spark.conf.set(Hnsw.ReportLocalMaxBytesKey, v))
-  }
-
   test("local reporter ≡ frame reporter: registered s21 rows across paths") {
-    def rows(maxLocal: String): Seq[(Long, Int, Long)] = withGate(maxLocal) {
+    def rows(): Seq[(Long, Int, Long)] =
       Hnsw.s21HnswTopK(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    }
-    assert(rows((1L << 30).toString) == rows("0"))
+    assert(localPath("hnsw.report")(rows()) == framePath("hnsw.report")(rows()))
   }
 
   test("local reporter ≡ frame reporter: s24 curve rows across paths") {
-    def rows(maxLocal: String): Seq[(Int, Int, Double, Double)] = withGate(maxLocal) {
+    def rows(): Seq[(Int, Int, Double, Double)] =
       Hnsw.s24HnswTuning(spark, sfDir).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3))).toSeq
-    }
-    assert(rows((1L << 30).toString) == rows("0"))
+    // the four walks route from s24's thread pool: the record must
+    // count every one of their decisions
+    assert(localPath("hnsw.walk", "hnsw.report")(rows()) ==
+      framePath("hnsw.walk", "hnsw.report")(rows()))
   }
 
   test("local reporter ≡ frame reporter on the duplicate-embedding fixture") {
@@ -49,12 +41,11 @@ class HnswReportEquivalenceSpec extends SparkSpec {
       (7L, 1L, 0.9), (7L, 2L, 0.9), (7L, 3L, 0.5), (7L, 5L, 0.7),
       (7L, 6L, -0.3), (7L, 7L, -0.9),
       (8L, 3L, 0.4)).toDF("qid", "node", "sc")
-    def rows(maxLocal: String): Set[(Long, Int, Long)] = withGate(maxLocal) {
+    def rows(): Set[(Long, Int, Long)] =
       Hnsw.expandTopK(e0, visited).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    }
-    val local = rows((1L << 30).toString)
-    val frame = rows("0")
+    val local = localPath("hnsw.report")(rows())
+    val frame = framePath("hnsw.report")(rows())
     assert(local == frame, s"onlyLocal=${local -- frame} onlyFrame=${frame -- local}")
     assert(local.nonEmpty)
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** r18: the broadcast-local read walk ([[Hnsw.localWalkVisited]]) must be
   * BIT-IDENTICAL to the iterative frame walk it short-circuits — same
@@ -13,31 +12,24 @@ import graft.SparkSpec
   * implementation fails loudly (the registered s21–s24/p11 rows all read
   * through this walk).
   */
-class HnswWalkEquivalenceSpec extends SparkSpec {
+class HnswWalkEquivalenceSpec extends LocalFrameEquivalence {
 
   private lazy val e = graft.Tables.embeddings(spark, sfDir)
     .select("vec_id", "embedding")
 
-  private def visitedSet(maxLocal: String, ef: Int): Set[(Long, Long, Double)] = {
-    val prev = spark.conf.getOption(Hnsw.WalkLocalMaxBytesKey)
-    spark.conf.set(Hnsw.WalkLocalMaxBytesKey, maxLocal)
-    try {
-      val vis = Hnsw.visitedFrame(e, Hnsw.buildAdjacency(e),
-        Similarity.externalQueries(spark, sfDir), ef = ef)
-      val rows = vis.select("qid", "node", "sc").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      graft.Checkpoints.release(vis)
-      rows
-    } finally {
-      prev.fold(spark.conf.unset(Hnsw.WalkLocalMaxBytesKey))(
-        v => spark.conf.set(Hnsw.WalkLocalMaxBytesKey, v))
-    }
+  private def visitedSet(ef: Int): Set[(Long, Long, Double)] = {
+    val vis = Hnsw.visitedFrame(e, Hnsw.buildAdjacency(e),
+      Similarity.externalQueries(spark, sfDir), ef = ef)
+    val rows = vis.select("qid", "node", "sc").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    graft.Checkpoints.release(vis)
+    rows
   }
 
   test("local walk ≡ frame walk: same visited set, bit-identical scores") {
     Seq(4, Hnsw.Ef).foreach { ef =>
-      val local = visitedSet((1L << 30).toString, ef)
-      val frame = visitedSet("0", ef)
+      val local = localPath("hnsw.walk")(visitedSet(ef))
+      val frame = framePath("hnsw.walk")(visitedSet(ef))
       assert(local.nonEmpty, s"empty visited set at ef=$ef")
       assert(local == frame,
         s"walks diverged at ef=$ef: onlyLocal=${(local -- frame).take(5)} " +
@@ -46,14 +38,9 @@ class HnswWalkEquivalenceSpec extends SparkSpec {
   }
 
   test("local walk serves the registered read: s21 rows unchanged across paths") {
-    def s21Rows(maxLocal: String): Seq[(Long, Int, Long)] = {
-      val prev = spark.conf.getOption(Hnsw.WalkLocalMaxBytesKey)
-      spark.conf.set(Hnsw.WalkLocalMaxBytesKey, maxLocal)
-      try Hnsw.s21HnswTopK(spark, sfDir).collect()
+    def s21Rows(): Seq[(Long, Int, Long)] =
+      Hnsw.s21HnswTopK(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      finally prev.fold(spark.conf.unset(Hnsw.WalkLocalMaxBytesKey))(
-        v => spark.conf.set(Hnsw.WalkLocalMaxBytesKey, v))
-    }
-    assert(s21Rows((1L << 30).toString) == s21Rows("0"))
+    assert(localPath("hnsw.walk")(s21Rows()) == framePath("hnsw.walk")(s21Rows()))
   }
 }

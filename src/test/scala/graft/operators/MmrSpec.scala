@@ -1,22 +1,11 @@
 package graft.operators
 
-import graft.SparkSpec
 import org.apache.spark.sql.functions.col
 
 /** s12 MMR re-rank: the full greedy selection recomputed driver-side
   * from the Carbonell-Goldstein definition, plus structural invariants. */
-class MmrSpec extends SparkSpec {
+class MmrSpec extends LocalFrameEquivalence {
   import spark.implicits._
-
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
 
   /** Driver-side MMR: shortlist by (cos desc, id asc), then greedy
     * argmax of λ·rel − (1−λ)·maxsim with id-asc tie-break. */
@@ -57,9 +46,8 @@ class MmrSpec extends SparkSpec {
     def run(): Seq[(Long, Int, Long)] =
       Similarity.s12MmrRerank(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val viaLocal = run() // default gate: sliver-sized, routes local
-    spark.conf.set(Similarity.MmrLocalMaxRowsKey, "0")
-    val viaFrames = try run() finally spark.conf.unset(Similarity.MmrLocalMaxRowsKey)
+    val viaLocal = localPath("mmr")(run()) // sliver-sized, routes local
+    val viaFrames = framePath("mmr")(run())
     assert(viaLocal == viaFrames)
   }
 

@@ -37,7 +37,7 @@ class RelationalSpec extends SparkSpec {
   }
 }
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends LocalFrameEquivalence {
   import graft.functions.{VectorExpressions => V}
 
   test("s1 ranks agree with a window-function reference plan") {
@@ -200,15 +200,12 @@ class SimilaritySpec extends SparkSpec {
   test("broadcast-local Lloyd equals the distributed training frames (full grid)") {
     import graft.sources.PqCodebook
     val e = graft.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    def cb(localGate: String): Seq[(Int, Int, Int, Seq[Long])] = {
-      spark.conf.set(PqCodebook.TrainLocalMaxRowsKey, localGate)
-      try PqCodebook.trainMany(e, Similarity.PqKs).collect()
+    def cb(): Seq[(Int, Int, Int, Seq[Long])] =
+      PqCodebook.trainMany(e, Similarity.PqKs).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getSeq[Long](3)))
         .toSeq.sortBy(t => (t._1, t._2, t._3))
-      finally spark.conf.unset(PqCodebook.TrainLocalMaxRowsKey)
-    }
-    val viaLocal = cb(PqCodebook.TrainLocalMaxRowsDefault.toString)
-    val viaFrames = cb("0") // 0 forces the distributed path
+    val viaLocal = localPath("pq.train")(cb())
+    val viaFrames = framePath("pq.train")(cb()) // budget 0: the distributed path
     assert(viaLocal == viaFrames,
       "local Lloyd diverges from the distributed training frames")
     assert(viaLocal.nonEmpty)
@@ -292,15 +289,12 @@ class SimilaritySpec extends SparkSpec {
     // collects the SAME filtered scan (the pushdown fires at collect
     // time), but its final plan roots at a local relation and no longer
     // displays the scan node.
-    val prev = spark.conf.getOption(Similarity.BruteLocalMaxBytesKey)
-    spark.conf.set(Similarity.BruteLocalMaxBytesKey, "0")
-    try {
+    framePath("brute") {
       val plan = Similarity.s5FilteredTopK(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("In(label, [1,2,3])"),
         s"label filter not pushed into the scan:\n$plan")
-    } finally prev.fold(spark.conf.unset(Similarity.BruteLocalMaxBytesKey))(
-      v => spark.conf.set(Similarity.BruteLocalMaxBytesKey, v))
+    }
   }
 
   test("v3 index stats partition the store exactly (counts, dim, checksum)") {
@@ -634,12 +628,11 @@ class DedupSpec extends SparkSpec {
     assert(collapsed == naive)
     // threshold -1 so the salted form's real shuffled group-pair join is
     // what gets validated, not an auto-broadcast shortcut
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
       val salted = Dedup.d5EmbeddingNearDupCollapsedSalted(spark, sfDir, salts = 4).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSeq
       assert(salted == naive)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 
   test("d11 semantic dedup keeps exactly the base corpus (every planted copy pruned)") {
@@ -661,13 +654,10 @@ class DedupSpec extends SparkSpec {
     // shuffled anti-join path (at this corpus size the replicated build
     // side is tiny enough that the default 10 MB threshold would quietly
     // auto-broadcast it, validating the wrong plan)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
       val saltedForm = Dedup.d11SemanticDedupSalted(spark, sfDir, salts = 4).collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSeq
       assert(saltedForm == broadcastForm)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     }
   }
 

@@ -83,15 +83,6 @@ class RetrievalSpec extends SparkSpec {
     val e = graft.Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     val qemb = e.find(_._1 == Retrieval.DenseQid).get._2
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
     val dense = e.filter(_._1 != Retrieval.DenseQid)
       .map { case (id, v) => (id, cos(qemb, v)) }
       .sortBy { case (id, s) => (-s, id) }.take(Retrieval.TopN)
@@ -110,15 +101,6 @@ class RetrievalSpec extends SparkSpec {
       .sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
     val e = graft.Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toMap
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
     val qe = e(Retrieval.DenseQid.toLong)
     val cand = fusedIds.filter(e.contains).map(id => id -> cos(qe, e(id))).toMap
     val lam = Similarity.MmrLambda

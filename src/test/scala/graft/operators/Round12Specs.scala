@@ -98,16 +98,6 @@ class TokenizerFertilitySpec extends SparkSpec {
   * every verdict, the exact-re-upload guarantee, and the broadcast plan. */
 class RangeSearchSpec extends SparkSpec {
 
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
   test("s18 verdicts equal the from-definition recompute; re-uploads always match") {
     val got = Similarity.s18RangeSearch(spark, sfDir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3)))).toMap
@@ -299,15 +289,6 @@ class MarkovTransitionsSpec extends SparkSpec {
   * recompute of chunk/embed/assign, and the fused-map plan contract. */
 class RagIndexBuildSpec extends SparkSpec {
 
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
   private def embed(chunk: String): Array[Float] = (0 until 8).map { k =>
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest((k.toString + chunk).getBytes("UTF-8"))
@@ -362,16 +343,6 @@ class RagIndexBuildSpec extends SparkSpec {
   * assignment, cutoffs, and survivor set, plus the no-corpus-window plan
   * contract. */
 class ProtoPruneSpec extends SparkSpec {
-
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
 
   test("d25 survivors equal the from-definition recompute; each cluster drops ~25%") {
     val got = Dedup.d25ProtoPrune(spark, sfDir).collect()

@@ -24,27 +24,20 @@ class SkewSpec extends SparkSpec {
   }
 }
 
-class StarComponentsSpec extends SparkSpec {
+class StarComponentsSpec extends LocalFrameEquivalence {
   import spark.implicits._
-
-  /** Evaluate `f` with the broadcast-local CC path disabled, so the
-    * DISTRIBUTED loops are what the equivalence pins exercise. */
-  private def forcedFrame[A](f: => A): A = {
-    spark.conf.set(Dedup.CcLocalMaxEdgesKey, "0")
-    try f finally spark.conf.unset(Dedup.CcLocalMaxEdgesKey)
-  }
 
   test("local, large-star/small-star and min-propagation labels all match on the d2 graph") {
     val edges = Dedup.d2NgramJaccard(spark, sfDir)
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
     def run(cc: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
       cc(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = forcedFrame(run(Dedup.connectedComponents))
-    val viaStar = forcedFrame(run(Dedup.connectedComponentsStar))
-    // default gate: sliver-sized graph routes to the driver-side
+    val viaProp = framePath("cc")(run(Dedup.connectedComponents))
+    val viaStar = framePath("cc")(run(Dedup.connectedComponentsStar))
+    // default budget: sliver-sized graph routes to the driver-side
     // union-find — must land on the identical fixed point
-    val viaLocal = run(Dedup.connectedComponentsStar)
-    val viaLocalProp = run(Dedup.connectedComponents)
+    val viaLocal = localPath("cc")(run(Dedup.connectedComponentsStar))
+    val viaLocalProp = localPath("cc")(run(Dedup.connectedComponents))
     assert(viaStar == viaProp)
     assert(viaLocal == viaProp)
     assert(viaLocalProp == viaProp)
@@ -61,12 +54,12 @@ class StarComponentsSpec extends SparkSpec {
         val v = rnd.nextInt(24).toLong
         (math.min(u, v), math.max(u, v) + 1) // +1 avoids self-loops
       }.toDF("u", "v")
-      val viaProp = forcedFrame(Dedup.connectedComponents(edges)
+      val viaProp = framePath("cc")(Dedup.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      val viaStar = forcedFrame(Dedup.connectedComponentsStar(edges)
+      val viaStar = framePath("cc")(Dedup.connectedComponentsStar(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      val viaLocal = Dedup.connectedComponentsStar(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val viaLocal = localPath("cc")(Dedup.connectedComponentsStar(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(viaStar == viaProp, s"divergence on edges ${edges.collect().toSeq}")
       assert(viaLocal == viaProp, s"local divergence on edges ${edges.collect().toSeq}")
     }
@@ -76,7 +69,7 @@ class StarComponentsSpec extends SparkSpec {
     // path 0-1-2-...-199: min-propagation moves the 0 label one hop per
     // round (199 rounds); the alternating star algorithm needs O(log n)
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("u", "v")
-    val labels = forcedFrame(Dedup.connectedComponentsStar(edges).collect())
+    val labels = framePath("cc")(Dedup.connectedComponentsStar(edges).collect())
     assert(labels.length == 200)
     assert(labels.forall(_.getLong(1) == 0L), "path did not collapse to component 0")
     val local = Dedup.connectedComponentsStar(edges).collect()
@@ -95,8 +88,7 @@ class BucketedJoinSpec extends SparkSpec {
       .write.bucketBy(4, "c_custkey").sortBy("c_custkey").saveAsTable("customer_b")
 
     // disable broadcast so the join must choose shuffle vs bucket-local
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
       val joined = spark.table("orders_b")
         .join(spark.table("customer_b"), col("o_custkey") === col("c_custkey"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -106,7 +98,6 @@ class BucketedJoinSpec extends SparkSpec {
       // every order has exactly one customer -> join preserves row count
       assert(joined.count() == graft.Tables.orders(spark, sfDir).count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS customer_b")
     }
@@ -122,8 +113,7 @@ class SemanticDedupPlanSpec extends SparkSpec {
     // join on (cid, salt): a BroadcastHashJoin LeftAnti here would mean
     // the corpus itself became a broadcast build side — the r6
     // scale-killer this assertion exists to keep dead.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
       val plan = graft.SparkEntry.queries("d11_semantic_dedup")(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("LeftAnti"), s"dominance anti-join missing:\n$plan")
@@ -136,8 +126,6 @@ class SemanticDedupPlanSpec extends SparkSpec {
       val antiIsShuffled = """(SortMergeJoin|ShuffledHashJoin)[^\n]*LeftAnti""".r
         .findFirstIn(plan).isDefined
       assert(antiIsShuffled, s"anti-join is neither sort-merge nor shuffled-hash:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     }
   }
 }

@@ -20,14 +20,13 @@ class RetrievalPlanSpec extends SparkSpec {
     // may shuffle (doc-keyed, group-count-bound); what must NOT happen
     // is the idf/stats frames arriving by shuffle, which at 100 TB would
     // put a vocabulary exchange on the query path.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
       val plan = Retrieval.t26Bm25(spark, sfDir).queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"),
         s"idf sliver should join by explicit broadcast:\n$plan")
       assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
         s"one-row stats frame should broadcast:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 
   test("s13's dense leg scores through the bounded top-k aggregate") {

@@ -27,15 +27,6 @@ class VectorStoreMaintenanceSpec extends SparkSpec {
     v
   }
 
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < Dim) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    dot / math.sqrt(na * nb)
-  }
-
   test("alignTo undoes an index permutation (no spurious retrains)") {
     val stored = Array.tabulate(4)(c => vec(c % 4, c))
     val permuted = Array(stored(2), stored(0), stored(3), stored(1))

@@ -22,15 +22,6 @@ class StreamingRangeCheckSpec extends SparkSpec {
     // extra stream rows with driver-computed verdicts: a one-hot vector
     // (novel unless some stored vector concentrates on dim 0) and a
     // byte-identical copy of stored vec 200 (can never pass)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
     val stored = store.collect().map(r => r.getSeq[Float](1).toArray)
     val dim = stored(0).length
     val oneHot = Array.tabulate(dim)(i => if (i == 0) 1.0f else 0.0f)
